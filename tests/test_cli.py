@@ -96,7 +96,8 @@ def test_spark_submit_pyfiles_deployment(cfg_path, tmp_path):
 
     zip_path = build(str(tmp_path / "tilekiln_spark.zip"))
     job = tmp_path / "spark_job.py"
-    shutil.copy("/root/repo/spark_job.py", job)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    shutil.copy(os.path.join(repo, "spark_job.py"), job)
     store = str(tmp_path / "store")
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)

@@ -4,12 +4,13 @@ names, and order-insensitive values.  tools/check_oracles.py runs the same
 comparison at sf0.01 (the driver's scale)."""
 
 import math
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = "/root/testdata/sf0.001"
 TABLES = [

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import json
 import math
+import os
 import sys
 
 import duckdb
@@ -116,8 +117,11 @@ def main():
 
     from pyspark.sql import SparkSession
 
+    # task threads follow the machine, as in tests/conftest.py: more
+    # threads than cores only thrash them
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()
     spark = (
-        SparkSession.builder.master("local[16]")
+        SparkSession.builder.master(f"local[{cpus}]")
         .appName("oracle_check")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.session.timeZone", "UTC")
@@ -130,7 +134,7 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
