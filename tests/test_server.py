@@ -5,6 +5,8 @@ live read-through fill, tilejson URL rewrite, /metrics exposition."""
 
 import datetime
 import json
+import os
+import time
 import urllib.error
 import urllib.request
 
@@ -84,6 +86,27 @@ def test_static_tile_payload_and_headers(static_server):
     status, headers2, content2 = _get(f"{base}/ts1/2/1/0.mvt", method="HEAD")
     assert status == 200 and content2 == b""
     assert headers2["Content-Length"] == headers["Content-Length"]
+
+
+def test_static_last_modified_is_gmt_outside_utc(static_server):
+    """Last-Modified names the same second as the E-tag when the server's
+    local time zone is not UTC (the stored `generated` is a naive local
+    datetime)."""
+    old_tz = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        status, headers, _ = _get(f"{static_server.base_url}/ts1/2/1/0.mvt")
+    finally:
+        if old_tz is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old_tz
+        time.tzset()
+    assert status == 200
+    lm = datetime.datetime.strptime(headers["Last-Modified"], "%a, %d %b %Y %H:%M:%S GMT")
+    etag_s = int(headers["E-tag"].split(".")[0])
+    assert lm.replace(tzinfo=datetime.timezone.utc).timestamp() == etag_s
 
 
 def test_static_tile_misses(static_server):

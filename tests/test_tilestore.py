@@ -284,3 +284,77 @@ def test_tileset_diff_no_separator_or_null_collisions(spark):
     assert got == {(0, 0): "changed", (0, 1): "changed"}
     with _pytest.raises(ValueError, match="value_cols"):
         tileset_diff(old, new)
+
+
+def test_get_tile_matches_spark_read_across_snapshots(spark, tmp_path):
+    """The snapshot-file lookup returns what the Spark table read collects:
+    same bytes, same Nones, `generated` equal to the microsecond — through
+    partial-layer writes, a layer column carried-forward partitions predate,
+    keyed and layer deletes and a partition drop."""
+    s = TileStore(spark, str(tmp_path), "parity")
+    s.create(layers=["water", "admin", "roads"], minzoom=0, maxzoom=14, tilejson="{}")
+
+    def check():
+        df = s.read()
+        gens = [c for c in df.columns if c.endswith("_generated")]
+        datas = [c for c in df.columns if c.endswith("_data")]
+        want = {
+            (r.zoom, r.x, r.y): (
+                r.generated,
+                {c[: -len("_data")]: None if r[c] is None else bytes(r[c]) for c in datas},
+            )
+            for r in df.select("zoom", "x", "y", F.greatest(*gens).alias("generated"), *datas)
+            .collect()
+        }
+        keys = [(z, x, y) for z in (2, 3) for x in range(2**z) for y in range(2**z)]
+        keys += [(4, 5, 5), (4, 15, 0), (4, 0, 15), (5, 0, 0)]  # (5, 0, 0): no partition
+        assert set(want) <= set(keys)
+        for key in keys:
+            got = s.get_tile(*key)
+            if key not in want:
+                assert got is None, key
+                continue
+            gen, blobs = got
+            assert (gen, blobs) == want[key], key
+            assert all(v is None or type(v) is bytes for v in blobs.values())
+
+    both = [
+        (2, 0, 0, b"W200", b"A200"), (2, 1, 0, b"W210", None), (2, 3, 2, b"W232", b"A232"),
+        (3, 0, 0, b"W300", b"A300"), (3, 2, 5, b"W325", b"A325"), (3, 7, 7, b"W377", b"A377"),
+        (4, 5, 5, b"W455", b"A455"),
+    ]
+    s.save_tiles(_tiles(spark, both, layers=("water", "admin")))
+    check()
+    # water only at z3: changed, unchanged and new keys
+    s.save_tiles(_tiles(spark, [(3, 2, 5, b"W325b"), (3, 7, 7, b"W377"), (3, 1, 6, b"W316")]))
+    check()
+    # a layer column only z3's new files carry; z2 and z4 are carried forward
+    s.save_tiles(_tiles(spark, [(3, 2, 5, b"R325"), (3, 0, 0, b"R300")], layers=("roads",)))
+    assert set(s._manifest(s.current_snapshot())["zooms"].values()) == {"v1", "v3"}
+    check()
+    s.delete_layers(spark.createDataFrame([(3, 7, 7)], "zoom int, x int, y int"), ["admin"])
+    check()
+    s.delete_tiles(spark.createDataFrame([(3, 0, 0)], "zoom int, x int, y int"))
+    check()
+    s.delete_zooms([4])
+    check()
+
+
+def test_get_tile_runs_no_spark_job(store, spark):
+    store.save_tiles(_tiles(spark, [(2, 1, 0, b"A"), (3, 1, 0, b"B")]))
+    store.delete_zooms([3])
+    sc = spark.sparkContext
+    group = "tilestore-get-tile-no-job"
+    sc.setJobGroup(group, "get_tile must not run a Spark job")
+    try:
+        assert store.get_tile(2, 1, 0)[1] == {"water": b"A"}
+        assert store.get_tile(2, 0, 0) is None  # miss in a stored zoom
+        assert store.get_tile(3, 1, 0) is None  # dropped zoom
+        assert store.get_tile(4, 0, 0) is None  # zoom never written
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+        # the group does see this thread's jobs
+        store.read().count()
+        assert sc.statusTracker().getJobIdsForGroup(group) != []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)

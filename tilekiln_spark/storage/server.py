@@ -29,8 +29,8 @@ Scale note: HTTP serving is a driver-side point-lookup shell over the same
 column semantics used for bulk export (:func:`serving.tile_responses`); a
 production deployment exports the tile snapshot to a key-value store and
 serves from that.  This server is the reference's dev/ops parity surface —
-request concurrency is the threaded handler, per-request work one pruned
-point lookup (A6).
+request concurrency is the threaded handler, per-request work one point
+lookup (A6) straight on the snapshot files, with no Spark job.
 """
 
 from __future__ import annotations
@@ -38,6 +38,7 @@ from __future__ import annotations
 import json
 import re
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 from tilekiln_spark.config.errors import ZoomNotDefined
@@ -71,12 +72,14 @@ def change_tilejson_url(tilejson: str, baseurl: str) -> str:
 def _http_headers(generated) -> dict[str, str]:
     """Last-Modified / E-tag from the stored timestamp (reference
     server/__init__.py:180-186: 'a specific x/y/z will not be generated
-    twice in the same ms')."""
+    twice in the same ms').  `generated` is a naive local datetime, so
+    both headers go through its epoch seconds: GMT whatever the local zone."""
     if generated is None:
         return {}
+    secs = int(generated.timestamp())
     return {
-        "Last-Modified": generated.strftime(HTTP_TIME),
-        "E-tag": f"{int(generated.timestamp())}.{generated.microsecond:06d}",
+        "Last-Modified": time.strftime(HTTP_TIME, time.gmtime(secs)),
+        "E-tag": f"{secs}.{generated.microsecond:06d}",
     }
 
 

@@ -32,8 +32,9 @@ Semantics ported (each noted with its reference source):
 - **metadata upsert** (A8, storage.py:445-466): updates minzoom/maxzoom/
   tilejson but — reference quirk preserved — NOT layers.
 - **tile fetch** (A6, storage.py:290-314): point lookup returning
-  GREATEST(generated) + per-layer bytes; zoom partition prune + x/y min-max
-  skip do the index's job.
+  GREATEST(generated) + per-layer bytes, read straight from the committed
+  snapshot files with pyarrow — no Spark job per GET; the manifest's zoom
+  partition prune + x/y row-group statistics skip do the index's job.
 - **stats** (B12-B14, storage.py:501-554): per-zoom COUNT(*), total byte
   size with COALESCE-to-0, exact PERCENTILE_CONT at
   [0,.25,.5,.75,.9,.95,.99,.999,1] (storage.py:25); empty zoom -> zeros
@@ -42,13 +43,17 @@ Semantics ported (each noted with its reference source):
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
 import time
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType, TimestampType
 
 from tilekiln_spark.config.errors import LayerNotDefined, ZoomNotDefined
 
@@ -121,6 +126,13 @@ class TileStore:
         with open(os.path.join(self._snapshot_dir(n), "_manifest.json")) as f:
             return json.load(f)
 
+    def _partitions(self, man: dict) -> dict[int, str]:
+        """zoom -> partition directory, in zoom order: the manifest's layout."""
+        return {
+            int(z): os.path.join(self.root, "snapshots", vdir, f"zoom={z}")
+            for z, vdir in sorted(man["zooms"].items(), key=lambda kv: int(kv[0]))
+        }
+
     def read(self, snapshot: int | None = None) -> DataFrame | None:
         """Current (or time-travel) tile table; None if no snapshot yet.
 
@@ -129,8 +141,6 @@ class TileStore:
         untouched by a commit are carried forward by reference, never
         rewritten).  Columns a carried-forward partition predates (a layer
         added later) read as NULL — schema lives in the manifest."""
-        from pyspark.sql.types import StructType
-
         n = self.current_snapshot() if snapshot is None else snapshot
         if n == 0:
             return None
@@ -138,10 +148,9 @@ class TileStore:
         schema = StructType.fromJson(man["schema"])
         other = [f for f in schema.fields if f.name != "zoom"]
         parts = []
-        for z_str, vdir in sorted(man["zooms"].items(), key=lambda kv: int(kv[0])):
-            pdir = os.path.join(self.root, "snapshots", vdir, f"zoom={z_str}")
+        for z, pdir in self._partitions(man).items():
             pdf = self.spark.read.parquet(pdir)
-            cols = [F.lit(int(z_str)).cast("int").alias("zoom")] + [
+            cols = [F.lit(z).cast("int").alias("zoom")] + [
                 (F.col(f.name) if f.name in pdf.columns else F.lit(None))
                 .cast(f.dataType).alias(f.name)
                 for f in other
@@ -149,10 +158,7 @@ class TileStore:
             parts.append(pdf.select(*cols))
         if not parts:
             return self.spark.createDataFrame([], schema)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return functools.reduce(DataFrame.unionByName, parts)
 
     def _commit(self, df: DataFrame, touched_zooms: list[int], lineage_extra: dict) -> int:
         """Partition-scoped commit (Iceberg dynamic-partition-overwrite
@@ -367,8 +373,6 @@ class TileStore:
         (the manifest simply stops referencing the partitions; no data files
         are read or written, the Iceberg partition-drop equivalent); None ->
         all zooms (reference storage.py:281-288, 606-609)."""
-        from pyspark.sql.types import StructType
-
         cur = self.current_snapshot()
         if cur == 0:
             return 0
@@ -413,47 +417,43 @@ class TileStore:
         w = F.broadcast(worklist.select("zoom", "x", "y").withColumn("__hit", F.lit(True)))
         joined = existing.join(w, ["zoom", "x", "y"], "left_outer")
         hit = F.col("__hit").isNotNull()
-        cols = []
-        for c in existing.columns:
-            # strip ONLY the trailing suffix: a layer legally named 'ocean_data'
-            # yields column 'ocean_data_data' and must map back to 'ocean_data'
-            if c.endswith("_data"):
-                L = c[: -len("_data")]
-            elif c.endswith("_generated"):
-                L = c[: -len("_generated")]
-            else:
-                L = None
-            if L is not None and L in layers:
-                cols.append(F.when(hit, F.lit(None)).otherwise(F.col(c)).alias(c))
-            else:
-                cols.append(F.col(c))
+        # exact column names: layer 'ocean_data' owns 'ocean_data_data', and
+        # column 'ocean_data' belongs to a layer 'ocean'
+        cleared = {f"{L}_{suffix}" for L in layers for suffix in ("data", "generated")}
+        cols = [
+            F.when(hit, F.lit(None)).otherwise(F.col(c)).alias(c) if c in cleared else F.col(c)
+            for c in existing.columns
+        ]
         return self._commit(joined.select(*cols), touched, {"op": "delete_layers", "layers": layers})
 
     # -- reads ----------------------------------------------------------------
 
     def get_tile(self, zoom: int, x: int, y: int):
-        """Point lookup (A6): partition prune on zoom, min/max skip on x/y;
-        returns (greatest generated, {layer: bytes}) like storage.py:290-314."""
-        df = self.read()
-        if df is None:
+        """Point lookup (A6) on the committed snapshot files, without Spark:
+        the manifest prunes to the zoom partition and, as `_commit` sorts
+        each zoom by (x, y), row-group statistics skip the rest.  Returns
+        (greatest generated, {layer: bytes}) like storage.py:290-314."""
+        n = self.current_snapshot()
+        if n == 0:
             return None
         meta = self.metadata()
         if zoom < meta["minzoom"] or zoom > meta["maxzoom"]:
             raise ZoomNotDefined(f"zoom {zoom} outside tileset range")
-        gen_cols = [c for c in df.columns if c.endswith("_generated")]
-        data_cols = [c for c in df.columns if c.endswith("_data")]
-        greatest = (
-            F.greatest(*gen_cols) if len(gen_cols) > 1 else F.col(gen_cols[0])
-        )
-        rows = (
-            df.filter((F.col("zoom") == zoom) & (F.col("x") == x) & (F.col("y") == y))
-            .select(greatest.alias("generated"), *data_cols)
-            .head(1)
-        )
-        if not rows:
+        man = self._manifest(n)
+        pdir = self._partitions(man).get(zoom)
+        if pdir is None:
             return None
-        r = rows[0]
-        return r["generated"], {c[: -len("_data")]: r[c] for c in data_cols}
+        # pyarrow skips the names starting with '.' or '_' (checksums, markers)
+        t = pq.read_table(pdir, filters=[("x", "=", x), ("y", "=", y)])
+        if t.num_rows == 0:
+            return None
+        # columns a carried-forward partition predates read as None
+        names = [f["name"] for f in man["schema"]["fields"]]
+        row = {c: _first_value(t, c) if c in t.column_names else None for c in names}
+        gens = [row[c] for c in names if c.endswith("_generated") and row[c] is not None]
+        # epoch microseconds -> the naive local datetime Spark's collect gives
+        generated = TimestampType().fromInternal(max(gens)) if gens else None
+        return generated, {c[: -len("_data")]: row[c] for c in names if c.endswith("_data")}
 
     # -- stats (B12-B14) -------------------------------------------------------
 
@@ -463,51 +463,48 @@ class TileStore:
         result upserted into tile_stats.parquet and returned."""
         meta = self.metadata()
         df = self.read()
-        spark = self.spark
-        zooms = spark.range(meta["minzoom"], meta["maxzoom"] + 1).select(
+        if df is None:  # no snapshot yet: every zoom of the range is empty
+            df = self.spark.createDataFrame([], "zoom int")
+        zooms = self.spark.range(meta["minzoom"], meta["maxzoom"] + 1).select(
             F.col("id").cast("int").alias("zoom")
         )
-        if df is None:
-            stats = zooms.select(
-                F.lit(self.id).alias("id"), "zoom",
-                F.lit(0).alias("num_tiles"), F.lit(0).alias("size"),
-                F.array([F.lit(float(p)) for p in PERCENTILES]).alias("percentile_points"),
-                F.array([F.lit(0.0)] * len(PERCENTILES)).alias("percentile_values"),
+        data_cols = [c for c in df.columns if c.endswith("_data")]
+        size = sum(
+            (F.coalesce(F.length(F.col(c)), F.lit(0)) for c in data_cols), F.lit(0)
+        )
+        points = F.array([F.lit(float(p)) for p in PERCENTILES])
+        per_zoom = (
+            df.withColumn("__size", size.cast("long"))
+            .groupBy("zoom")
+            .agg(
+                F.count("*").alias("num_tiles"),
+                F.coalesce(F.sum("__size"), F.lit(0)).alias("size"),
+                F.percentile(F.col("__size"), points).alias("percentile_values"),
             )
-        else:
-            data_cols = [c for c in df.columns if c.endswith("_data")]
-            size = sum(
-                (F.coalesce(F.length(F.col(c)), F.lit(0)) for c in data_cols), F.lit(0)
+        )
+        zeros = F.array([F.lit(0.0)] * len(PERCENTILES))
+        stats = (
+            zooms.join(per_zoom, "zoom", "left_outer")
+            .select(
+                F.lit(self.id).alias("id"),
+                "zoom",
+                F.coalesce(F.col("num_tiles"), F.lit(0)).alias("num_tiles"),
+                F.coalesce(F.col("size"), F.lit(0)).alias("size"),
+                points.alias("percentile_points"),
+                F.coalesce(F.col("percentile_values"), zeros).alias("percentile_values"),
             )
-            per_zoom = (
-                df.withColumn("__size", size.cast("long"))
-                .groupBy("zoom")
-                .agg(
-                    F.count("*").alias("num_tiles"),
-                    F.coalesce(F.sum("__size"), F.lit(0)).alias("size"),
-                    F.percentile(
-                        F.col("__size"),
-                        F.array([F.lit(float(p)) for p in PERCENTILES]),
-                    ).alias("percentile_values"),
-                )
-            )
-            stats = (
-                zooms.join(per_zoom, "zoom", "left_outer")
-                .select(
-                    F.lit(self.id).alias("id"),
-                    "zoom",
-                    F.coalesce(F.col("num_tiles"), F.lit(0)).alias("num_tiles"),
-                    F.coalesce(F.col("size"), F.lit(0)).alias("size"),
-                    F.array([F.lit(float(p)) for p in PERCENTILES]).alias("percentile_points"),
-                    F.coalesce(
-                        F.col("percentile_values"),
-                        F.array([F.lit(0.0)] * len(PERCENTILES)),
-                    ).alias("percentile_values"),
-                )
-            )
+        )
         out = os.path.join(self.root, "tile_stats.parquet")
         stats.write.mode("overwrite").parquet(out)
-        return spark.read.parquet(out)
+        return self.spark.read.parquet(out)
+
+
+def _first_value(table: pa.Table, name: str):
+    """A column's first value; timestamps as epoch microseconds (UTC)."""
+    col = table.column(name).slice(0, 1)
+    if pa.types.is_timestamp(col.type):
+        col = col.cast(pa.timestamp("us", col.type.tz)).cast(pa.int64())
+    return col[0].as_py()
 
 
 def tileset_diff(

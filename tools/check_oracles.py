@@ -115,6 +115,14 @@ def main():
     sf_dir = args[0] if args else "/root/testdata/sf0.01"
     only = set(args[1:])
 
+    # the Python workers import tilekiln_spark too, and they get the repo
+    # only through PYTHONPATH (this process's sys.path does not reach them)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (repo, os.environ.get("PYTHONPATH")) if p
+    )
+    sys.path.insert(0, repo)
+
     from pyspark.sql import SparkSession
 
     # task threads follow the machine, as in tests/conftest.py: more
@@ -134,7 +142,6 @@ def main():
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
 
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as entrymod
 
     qs = entrymod.queries()
