@@ -12800,9 +12800,11 @@ def oracle_sql() -> dict[str, str]:
         ) WHERE rn = 1
     """
 
+    # pairs is MATERIALIZED: DuckDB inlines a plain CTE at every reference,
+    # and the recursive walk reads edges (so the all-pairs join) each round
     o["dedup_clusters"] = f"""
         {_NEARDUP_SQL.replace("WITH corpus", "WITH RECURSIVE corpus", 1)}, {_SHINGLES},
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.doc_id AS ka, b.doc_id AS kb
             FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
@@ -12827,7 +12829,7 @@ def oracle_sql() -> dict[str, str]:
 
     o["cluster_split"] = f"""
         {_NEARDUP_SQL.replace("WITH corpus", "WITH RECURSIVE corpus", 1)}, {_SHINGLES},
-        pairs AS (
+        pairs AS MATERIALIZED (
             SELECT a.doc_id AS ka, b.doc_id AS kb
             FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
@@ -12997,6 +12999,7 @@ def oracle_sql() -> dict[str, str]:
         FROM c
     """
 
+    # pairs MATERIALIZED as in dedup_clusters; the variants below inherit it
     o["corpus_pipeline"] = r"""
         WITH RECURSIVE corpus AS (
             SELECT doc_id, text FROM documents
@@ -13017,7 +13020,7 @@ def oracle_sql() -> dict[str, str]:
             FROM (SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS toks
                   FROM exact)
             WHERE len(toks) >= 3
-        ), pairs AS (
+        ), pairs AS MATERIALIZED (
             SELECT a.doc_id AS ka, b.doc_id AS kb
             FROM shingled a JOIN shingled b ON a.doc_id < b.doc_id
             WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /

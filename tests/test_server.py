@@ -4,8 +4,10 @@ tilekiln/dev/__init__.py) — routes, status codes, headers, payload order,
 live read-through fill, tilejson URL rewrite, /metrics exposition."""
 
 import datetime
+import http.client
 import json
 import os
+import statistics
 import time
 import urllib.error
 import urllib.request
@@ -107,6 +109,24 @@ def test_static_last_modified_is_gmt_outside_utc(static_server):
     lm = datetime.datetime.strptime(headers["Last-Modified"], "%a, %d %b %Y %H:%M:%S GMT")
     etag_s = int(headers["E-tag"].split(".")[0])
     assert lm.replace(tzinfo=datetime.timezone.utc).timestamp() == etag_s
+
+
+def test_static_keep_alive_gets_do_not_stall(static_server):
+    """Sequential GETs on one keep-alive connection answer in milliseconds:
+    with Nagle on, each response body waits ~40 ms for the delayed ACK.
+    The first GETs are skipped, as Linux quick-ACKs a new connection."""
+    conn = http.client.HTTPConnection(static_server.host, static_server.port, timeout=60)
+    times = []
+    try:
+        for _ in range(40):
+            t0 = time.perf_counter()
+            conn.request("GET", "/ts1/2/1/0.mvt")
+            r = conn.getresponse()
+            assert (r.status, r.read()) == (200, b"WWAA")
+            times.append(time.perf_counter() - t0)
+    finally:
+        conn.close()
+    assert statistics.median(times[20:]) < 0.020, times
 
 
 def test_static_tile_misses(static_server):

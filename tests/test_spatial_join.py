@@ -96,10 +96,9 @@ def test_knn_assign(spark):
     pts = pages_geo(pages(spark, 300))
     got = knn_assign(pts, cents, k=1, search_zoom=0).select("url", "cid", "mx", "my").collect()
     assert len(got) == 300
+    crows = cents.collect()
     for r in got:
-        dists = [
-            (r.mx - c.cx) ** 2 + (r.my - c.cy) ** 2 for c in cents.collect()
-        ]
+        dists = [(r.mx - c.cx) ** 2 + (r.my - c.cy) ** 2 for c in crows]
         assert dists[r.cid] == min(dists)
 
     # k=2 returns two ranked rows per point

@@ -1,7 +1,11 @@
 """Tile storage semantics (reference storage.py parity — FIXTURES.md §6)."""
 
+import os
+import sys
+import threading
 import time
 
+import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
@@ -358,3 +362,86 @@ def test_get_tile_runs_no_spark_job(store, spark):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+
+
+def test_get_tile_reads_row_groups_of_foreign_files(spark, tmp_path):
+    """A partition of several files and small row groups, one file without
+    statistics, Spark's INT96 timestamps and non-data files beside them:
+    the lookup returns what it returned on the files Spark wrote."""
+    s = TileStore(spark, str(tmp_path), "rg")
+    s.create(layers=["water", "admin"], minzoom=0, maxzoom=14, tilejson="{}")
+    rows = [
+        (3, x, y, b"W%d%d" % (x, y), None if (x + y) % 3 == 0 else b"A%d%d" % (x, y))
+        for x in range(8) for y in range(8) if (x * 5 + y * 3) % 4 != 1
+    ]
+    s.save_tiles(_tiles(spark, rows, layers=("water", "admin")))
+    keys = [(3, x, y) for x in range(8) for y in range(8)]
+    want = {k: s.get_tile(*k) for k in keys}
+    absent = [k for k, v in want.items() if v is None]
+    assert len(absent) == 64 - len(rows) and absent
+
+    pdir = s._partitions(s._manifest(s.current_snapshot()))[3]
+    t = pq.read_table(pdir).sort_by([("x", "ascending"), ("y", "ascending")])
+    for name in os.listdir(pdir):
+        os.remove(os.path.join(pdir, name))
+    half = t.num_rows // 2
+    for name, part, stats in (("part-a.parquet", t.slice(0, half), True),
+                              ("part-b.parquet", t.slice(half), False)):
+        pq.write_table(part, os.path.join(pdir, name), row_group_size=3,
+                       write_statistics=stats, use_deprecated_int96_timestamps=True)
+    with open(os.path.join(pdir, ".part-a.parquet.crc"), "wb") as f:
+        f.write(b"not parquet")
+    open(os.path.join(pdir, "_SUCCESS"), "w").close()
+
+    # some absent key lies inside a row group's x/y range: statistics alone
+    # cannot rule it out, the row filter must
+    md = pq.read_metadata(os.path.join(pdir, "part-a.parquet"))
+    assert [md.schema.column(c).path for c in (0, 1)] == ["x", "y"]
+    ranges = []
+    for i in range(md.num_row_groups):
+        sx, sy = (md.row_group(i).column(c).statistics for c in (0, 1))
+        ranges.append((sx.min, sx.max, sy.min, sy.max))
+    assert any(
+        x0 <= x <= x1 and y0 <= y <= y1 for _, x, y in absent for x0, x1, y0, y1 in ranges
+    )
+    md = pq.read_metadata(os.path.join(pdir, "part-b.parquet"))
+    assert not any(md.row_group(i).column(0).is_stats_set for i in range(md.num_row_groups))
+    for k in keys:
+        assert s.get_tile(*k) == want[k], k
+
+
+def test_commit_files_are_never_torn(store, spark):
+    """Readers racing metadata and snapshot commits see whole files."""
+    store.save_tiles(_tiles(spark, [(2, 1, 0, b"W")]))
+    errors = []
+    reads = [0] * 5  # more reader threads than the suite's usual 4 cores
+    stop = threading.Event()
+
+    def reader(k):
+        while not stop.is_set():
+            try:
+                store.current_snapshot()
+                store.metadata()
+                assert store.get_tile(2, 1, 0)[1]["water"] == b"W"
+            except Exception as e:  # a torn file shows as any of several errors
+                errors.append(e)
+                return
+            reads[k] += 1
+
+    threads = [threading.Thread(target=reader, args=(k,)) for k in range(len(reads))]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for i in range(100):
+            store.set_metadata(0, 14, "{}" if i % 2 else '{"tilejson": "3.0.0"}')
+            store.delete_zooms([])
+    finally:
+        stop.set()
+        for t in threads:
+            t.join(timeout=30)
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert all(reads)

@@ -30,7 +30,11 @@ column semantics used for bulk export (:func:`serving.tile_responses`); a
 production deployment exports the tile snapshot to a key-value store and
 serves from that.  This server is the reference's dev/ops parity surface —
 request concurrency is the threaded handler, per-request work one point
-lookup (A6) straight on the snapshot files, with no Spark job.
+lookup (A6) straight on the snapshot files, with no Spark job.  The handler
+sets TCP_NODELAY on each connection, as uvicorn's transports do for the
+reference: a response goes out as a header send and a body send, and with
+Nagle's algorithm on, the body of every keep-alive GET after the first would
+wait ~40 ms for the client's delayed ACK.
 """
 
 from __future__ import annotations
@@ -116,6 +120,7 @@ class TileServer:
 
         class Handler(BaseHTTPRequestHandler):
             protocol_version = "HTTP/1.1"
+            disable_nagle_algorithm = True  # TCP_NODELAY: see "Scale note"
 
             def log_message(self, *a):  # quiet test runs
                 pass

@@ -33,8 +33,14 @@ Semantics ported (each noted with its reference source):
   tilejson but — reference quirk preserved — NOT layers.
 - **tile fetch** (A6, storage.py:290-314): point lookup returning
   GREATEST(generated) + per-layer bytes, read straight from the committed
-  snapshot files with pyarrow — no Spark job per GET; the manifest's zoom
-  partition prune + x/y row-group statistics skip do the index's job.
+  snapshot files with `pyarrow.parquet.ParquetFile` — no Spark job and no
+  dataset per GET; the manifest's zoom partition prune + reading only the
+  row groups whose x/y min/max statistics can hold the key do the index's
+  job.
+- **commit files**: `CURRENT`, `metadata.json`, manifests and lineage are
+  written to a dot-named temp file and renamed into place, so a concurrent
+  reader (a GET during a live fill, `serve static` during `generate tiles`)
+  sees the old file or the new one, never a torn one.
 - **stats** (B12-B14, storage.py:501-554): per-zoom COUNT(*), total byte
   size with COALESCE-to-0, exact PERCENTILE_CONT at
   [0,.25,.5,.75,.9,.95,.99,.999,1] (storage.py:25); empty zoom -> zeros
@@ -47,9 +53,11 @@ import functools
 import json
 import os
 import shutil
+import threading
 import time
 
 import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -96,8 +104,7 @@ class TileStore:
             return json.load(f)
 
     def _write_meta(self, meta: dict):
-        with open(self._meta_path, "w") as f:
-            json.dump(meta, f)
+        _replace_file(self._meta_path, json.dumps(meta))
 
     def set_metadata(self, minzoom: int, maxzoom: int, tilejson: str):
         """Metadata upsert (A8): minzoom/maxzoom/tilejson only — layers are
@@ -236,20 +243,13 @@ class TileStore:
     def _write_snapshot(self, n, zooms_map, schema, lineage, lineage_extra) -> None:
         out = self._snapshot_dir(n)
         os.makedirs(out, exist_ok=True)
-        with open(os.path.join(out, "_manifest.json"), "w") as f:
-            json.dump({"zooms": zooms_map, "schema": schema.jsonValue()}, f)
-        with open(os.path.join(self.root, "lineage", f"v{n}.json"), "w") as f:
-            json.dump(
-                {
-                    "snapshot": n,
-                    "committed_at": time.time(),
-                    "partitions": lineage,
-                    **lineage_extra,
-                },
-                f,
-            )
-        with open(os.path.join(self.root, "CURRENT"), "w") as f:
-            f.write(str(n))
+        _replace_file(
+            os.path.join(out, "_manifest.json"),
+            json.dumps({"zooms": zooms_map, "schema": schema.jsonValue()}),
+        )
+        entry = {"snapshot": n, "committed_at": time.time(), "partitions": lineage, **lineage_extra}
+        _replace_file(os.path.join(self.root, "lineage", f"v{n}.json"), json.dumps(entry))
+        _replace_file(os.path.join(self.root, "CURRENT"), str(n))
 
     def lineage(self, snapshot: int) -> dict:
         with open(os.path.join(self.root, "lineage", f"v{snapshot}.json")) as f:
@@ -443,9 +443,15 @@ class TileStore:
         pdir = self._partitions(man).get(zoom)
         if pdir is None:
             return None
-        # pyarrow skips the names starting with '.' or '_' (checksums, markers)
-        t = pq.read_table(pdir, filters=[("x", "=", x), ("y", "=", y)])
-        if t.num_rows == 0:
+        t = None
+        for name in sorted(os.listdir(pdir)):
+            if name.startswith((".", "_")):  # checksums, markers
+                continue
+            with pq.ParquetFile(os.path.join(pdir, name)) as f:
+                t = _read_key(f, x, y)
+            if t is not None:
+                break
+        if t is None:
             return None
         # columns a carried-forward partition predates read as None
         names = [f["name"] for f in man["schema"]["fields"]]
@@ -497,6 +503,34 @@ class TileStore:
         out = os.path.join(self.root, "tile_stats.parquet")
         stats.write.mode("overwrite").parquet(out)
         return self.spark.read.parquet(out)
+
+
+def _replace_file(path: str, text: str) -> None:
+    """Write `path` whole through a dot-named temp file and a rename."""
+    head, name = os.path.split(path)
+    tmp = os.path.join(head, f".{name}.{os.getpid()}.{threading.get_ident()}")
+    with open(tmp, "w") as f:
+        f.write(text)
+    os.replace(tmp, path)
+
+
+def _read_key(f: pq.ParquetFile, x: int, y: int) -> pa.Table | None:
+    """The rows keyed (x, y) from the row groups whose min/max statistics
+    can hold the key (a group without them is always read); None if none."""
+    md = f.metadata
+    # leaf column paths: a struct column has several leaves
+    paths = [md.schema.column(i).path for i in range(md.num_columns)]
+    groups = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        stats = [(rg.column(paths.index(c)).statistics, v) for c, v in (("x", x), ("y", y))]
+        if all(s is None or not s.has_min_max or s.min <= v <= s.max for s, v in stats):
+            groups.append(i)
+    if not groups:
+        return None
+    t = f.read_row_groups(groups)
+    t = t.filter(pc.and_(pc.equal(t["x"], x), pc.equal(t["y"], y)))
+    return t if t.num_rows else None
 
 
 def _first_value(table: pa.Table, name: str):
