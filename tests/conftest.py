@@ -1,3 +1,4 @@
+import logging
 import os
 
 import pytest
@@ -27,3 +28,11 @@ def spark():
     )
     s.sparkContext.setLogLevel("WARN")
     yield s
+
+
+@pytest.fixture
+def local_solve_log(caplog):
+    """The size-adaptive decisions (operators/local_solve.py) logged so
+    far in the test, as {"op", "path", "count", "cap"} dicts."""
+    caplog.set_level(logging.INFO, logger="tilekiln_spark.operators.local_solve")
+    return lambda: [r.local_solve for r in caplog.records if hasattr(r, "local_solve")]

@@ -177,10 +177,11 @@ def test_label_propagation_rounds_validation(spark):
         label_propagation(_edges(spark, [(0, 1)]), rounds=0)
 
 
-def test_label_propagation_local_equals_distributed(spark):
+def test_label_propagation_local_equals_distributed(spark, monkeypatch, local_solve_log):
     # r6 size-adaptive path: the driver-local numpy rounds must be
     # round-by-round identical to the distributed join/groupBy loop
     # (mode of neighbor labels, smallest-label tie-break — all integers)
+    from tilekiln_spark.operators import local_solve
     from tilekiln_spark.operators.graph import label_propagation
 
     n = 500
@@ -192,17 +193,12 @@ def test_label_propagation_local_equals_distributed(spark):
     for rounds in (1, 2, 4):
         local = {r["node"]: r["label"]
                  for r in label_propagation(e, rounds=rounds).collect()}
-        prev = spark.conf.get("spark.tilekiln.lpa.localEdges", None)
-        spark.conf.set("spark.tilekiln.lpa.localEdges", "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(local_solve, "MAX_LOCAL_ROWS", -1)
             dist = {r["node"]: r["label"]
                     for r in label_propagation(e, rounds=rounds).collect()}
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.tilekiln.lpa.localEdges")
-            else:
-                spark.conf.set("spark.tilekiln.lpa.localEdges", prev)
         assert local == dist
+    assert [d["path"] for d in local_solve_log()] == ["local", "distributed"] * 3
 
 
 def test_modularity_two_cliques(spark):

@@ -2,6 +2,7 @@
 
 import pyspark.sql.functions as F
 
+from tilekiln_spark.operators import local_solve
 from tilekiln_spark.operators.packing import pack_sequences
 
 SEQ = 10
@@ -38,17 +39,16 @@ def test_pack_partition_layout_independent(spark):
     assert a == b
 
 
-def test_pack_no_global_single_reducer(spark):
+def test_pack_no_global_single_reducer(spark, monkeypatch, local_solve_log):
     # the DISTRIBUTED path (above the r6 local-docs cap) must
     # range-partition, never funnel through one reducer via a global
     # Window.orderBy; the local path is a LocalTableScan by construction
     d = _docs(spark, [3] * 100)
-    spark.conf.set("spark.tilekiln.pack.localDocs", "0")
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(local_solve, "MAX_LOCAL_ROWS", -1)
         plan = pack_sequences(d, 8, "n_tokens", num_partitions=4)._jdf \
             .queryExecution().executedPlan().toString()
-    finally:
-        spark.conf.unset("spark.tilekiln.pack.localDocs")
+    assert [x["path"] for x in local_solve_log()] == ["distributed"]
     assert "rangepartitioning" in plan.lower()
     assert "SinglePartition" not in plan
     local_plan = pack_sequences(d, 8, "n_tokens")._jdf \
@@ -123,7 +123,7 @@ def test_pack_token_sequences_null_ids_are_zero_length(spark):
     assert got == {0: list(range(5)) + [100, 101, 102], 1: [103, 104]}
 
 
-def test_pack_local_equals_two_pass(spark):
+def test_pack_local_equals_two_pass(spark, monkeypatch, local_solve_log):
     # r6 size-adaptive path: the driver-local prefix sum must be
     # bit-identical to the two-pass range-partition form, including the
     # RANGE-frame tie semantics for duplicate keys and zero-length docs
@@ -140,13 +140,8 @@ def test_pack_local_equals_two_pass(spark):
     )
     for frame in (df, big):
         local = sorted(tuple(r) for r in pack_sequences(frame, 8, "n").collect())
-        prev = spark.conf.get("spark.tilekiln.pack.localDocs", None)
-        spark.conf.set("spark.tilekiln.pack.localDocs", "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(local_solve, "MAX_LOCAL_ROWS", -1)
             dist = sorted(tuple(r) for r in pack_sequences(frame, 8, "n").collect())
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.tilekiln.pack.localDocs")
-            else:
-                spark.conf.set("spark.tilekiln.pack.localDocs", prev)
         assert local == dist
+    assert [d["path"] for d in local_solve_log()] == ["local", "distributed"] * 2

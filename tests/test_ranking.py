@@ -69,7 +69,8 @@ class TestConnectedComponentsAdaptive:
     def _pairs(self, spark, edges):
         return spark.createDataFrame(edges, "key_a long, key_b long")
 
-    def test_local_equals_distributed(self, spark):
+    def test_local_equals_distributed(self, spark, monkeypatch, local_solve_log):
+        from tilekiln_spark.operators import local_solve
         from tilekiln_spark.operators.dedup import connected_components
 
         rng = random.Random(11)
@@ -86,15 +87,10 @@ class TestConnectedComponentsAdaptive:
         pairs = self._pairs(spark, edges)
 
         local = connected_components(pairs).collect()
-        prev = spark.conf.get("spark.tilekiln.cc.localEdges", None)
-        spark.conf.set("spark.tilekiln.cc.localEdges", "0")
-        try:
+        with monkeypatch.context() as m:
+            m.setattr(local_solve, "MAX_LOCAL_ROWS", -1)
             dist = connected_components(pairs).collect()
-        finally:
-            if prev is None:
-                spark.conf.unset("spark.tilekiln.cc.localEdges")
-            else:
-                spark.conf.set("spark.tilekiln.cc.localEdges", prev)
+        assert [d["path"] for d in local_solve_log()] == ["local", "distributed"]
         assert sorted((r["node"], r["component"]) for r in local) == sorted(
             (r["node"], r["component"]) for r in dist
         )

@@ -757,46 +757,39 @@ def test_flow_accumulation_raises_past_cap(spark):
         flow_accumulation(_bowl_cells(spark), res=16, max_iter=2)
 
 
-def _force_flow_distributed(spark):
-    prev = spark.conf.get("spark.tilekiln.flow.localCells", None)
-    spark.conf.set("spark.tilekiln.flow.localCells", "0")
-
-    def restore():
-        if prev is None:
-            spark.conf.unset("spark.tilekiln.flow.localCells")
-        else:
-            spark.conf.set("spark.tilekiln.flow.localCells", prev)
-
-    return restore
-
-
-def test_flow_accumulation_local_equals_distributed(spark):
+def test_flow_accumulation_local_equals_distributed(spark, monkeypatch, local_solve_log):
     # r6 size-adaptive path: the driver-local Kahn solve must be
     # bit-identical to the distributed fixpoint (exact integer counts)
+    from tilekiln_spark.operators import local_solve
     from tilekiln_spark.operators.raster import flow_accumulation
 
     cells = _bowl_cells(spark)
     local = {(r["gx"], r["gy"]): (r["z"], r["d8"], r["acc"])
              for r in flow_accumulation(cells, res=16).collect()}
-    restore = _force_flow_distributed(spark)
-    try:
+    with monkeypatch.context() as m:
+        m.setattr(local_solve, "MAX_LOCAL_ROWS", -1)
         dist = {(r["gx"], r["gy"]): (r["z"], r["d8"], r["acc"])
                 for r in flow_accumulation(cells, res=16).collect()}
-    finally:
-        restore()
     assert local == dist
+    assert [d["path"] for d in local_solve_log()] == ["local", "distributed"]
 
 
-def test_flow_accumulation_max_iter_parity(spark):
+def test_flow_accumulation_max_iter_parity(spark, monkeypatch, local_solve_log):
     # the local pass must raise exactly when the distributed loop would:
     # the bowl's longest path is 8, the fixpoint is detected at round 9
+    from tilekiln_spark.operators import local_solve
     from tilekiln_spark.operators.raster import flow_accumulation
 
     import pytest as _pytest
     cells = _bowl_cells(spark)
-    with _pytest.raises(ValueError):
-        flow_accumulation(cells, res=16, max_iter=8).count()
-    assert flow_accumulation(cells, res=16, max_iter=9).count() == 256
+    for cap in (local_solve.MAX_LOCAL_ROWS, -1):
+        monkeypatch.setattr(local_solve, "MAX_LOCAL_ROWS", cap)
+        with _pytest.raises(ValueError):
+            flow_accumulation(cells, res=16, max_iter=8).count()
+        assert flow_accumulation(cells, res=16, max_iter=9).count() == 256
+    assert [d["path"] for d in local_solve_log()] == (
+        ["local"] * 2 + ["distributed"] * 2
+    )
 
 
 def test_watershed_bowl_goldens(spark):

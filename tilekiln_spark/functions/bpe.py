@@ -35,7 +35,13 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from tilekiln_spark.operators.local_solve import log_decision
+
 END = "</w>"
+# word types at or below which bpe_train merges on the driver: the merge
+# loop holds one Python string per type, a different unit from the
+# int64 rows of local_solve.MAX_LOCAL_ROWS
+LOCAL_WORDS = 262144
 
 
 def _spaced_symbols(word: Column) -> Column:
@@ -76,16 +82,15 @@ def bpe_train(
     r6: the working set is the top-V word-type table — bounded at
     ``v_words`` rows BY THE FUNCTION'S OWN CONTRACT (that bound is what
     makes every round's state broadcast-sized; module docstring).  At or
-    below ``spark.tilekiln.bpe.localWords`` (default 262144) the counting
-    pass's rows come back once and the merge loop runs locally with the
-    IDENTICAL pair-count / (n desc, x asc, y asc) tie-break /
-    non-overlapping left-to-right replace semantics — one job instead of
-    two jobs per merge round.  A larger v_words keeps the distributed
-    loop.
+    below ``LOCAL_WORDS`` (262144) the counting pass's rows come back
+    once and the merge loop runs locally with the IDENTICAL pair-count /
+    (n desc, x asc, y asc) tie-break / non-overlapping left-to-right
+    replace semantics — one job instead of two jobs per merge round.  A
+    larger v_words keeps the distributed loop.
     """
-    spark = df.sparkSession
-    local_cap = int(spark.conf.get("spark.tilekiln.bpe.localWords", "262144"))
-    if v_words <= local_cap:
+    local = v_words <= LOCAL_WORDS
+    log_decision("bpe_train", local, v_words, LOCAL_WORDS)
+    if local:
         rows = word_counts(df, text_col, v_words).collect()
         return _bpe_train_local(
             [(r["w"], int(r["c"])) for r in rows], num_merges

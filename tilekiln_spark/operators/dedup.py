@@ -32,6 +32,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType
 
+from tilekiln_spark.operators.local_solve import collect_local, local_frame
+
 # Mersenne prime 2^61-1: permutation hash universe (classic MinHash choice)
 _P = (1 << 61) - 1
 
@@ -48,14 +50,10 @@ def spread_cpu(df: DataFrame, *key_cols: str) -> DataFrame:
     parquet scans as one task and a tokenize/encode kernel runs serially —
     redistribute across the cores first (hash on ``key_cols`` when given,
     else round-robin).  At corpus scale partitions >= cores already and
-    the frame returns unchanged: no exchange on the 100 TB path.
-    ``spark.tilekiln.spreadCpu.enabled=false`` disables the spread."""
+    the frame returns unchanged: no exchange on the 100 TB path."""
     if df.isStreaming:  # no .rdd on streaming frames; micro-batches are small
         return df
-    spark = df.sparkSession
-    if spark.conf.get("spark.tilekiln.spreadCpu.enabled", "true") != "true":
-        return df
-    n_parts = spark.sparkContext.defaultParallelism
+    n_parts = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n_parts:
         return df
     return df.repartition(n_parts, *key_cols) if key_cols else df.repartition(n_parts)
@@ -587,8 +585,8 @@ def connected_components(
     dedup_clusters).
 
     Size-adaptive execution (round 6): when the DISTINCT edge list is small
-    (<= ``spark.tilekiln.cc.localEdges`` rows, default 4M — ~64 MB of Arrow
-    longs, the same bounded-collect budget class as the broadcast-PIP ring
+    (<= ``local_solve.MAX_LOCAL_ROWS`` rows, 4M — ~64 MB of Arrow longs,
+    the same bounded-collect budget class as the broadcast-PIP ring
     closure), the component solve runs as one vectorized numpy min-label /
     pointer-jumping pass on the driver and the labels re-enter the plan as a
     (small) local relation — the contraction loop's ~R rounds x 3 shuffles
@@ -603,13 +601,12 @@ def connected_components(
     edges = pairs.select(
         F.col(key_a).cast("long").alias("src"), F.col(key_b).cast("long").alias("dst")
     ).filter(F.col("src") != F.col("dst"))
-    # lazy checkpoint: the sizing count below is the materializing job, so
-    # sizing + lineage-cut cost ONE job, not two
+    # lazy checkpoint: the sizing aggregate in collect_local is the
+    # materializing job, so sizing + lineage-cut cost ONE job, not two
     edges = edges.localCheckpoint(eager=False)
-    n_edges = edges.count()
-    local_cap = int(spark.conf.get("spark.tilekiln.cc.localEdges", "4000000"))
-    if n_edges <= local_cap:
-        return _cc_local(spark, edges, n_edges)
+    arrays = collect_local("connected_components", edges, ["src", "dst"])
+    if arrays is not None:
+        return _cc_local(spark, *arrays)
 
     def _fingerprint(e: DataFrame) -> tuple:
         # fingerprint of the round's canonical (distinct) edge set — no
@@ -640,23 +637,13 @@ def connected_components(
     return members.union(roots).distinct()
 
 
-def _cc_local(spark, edges: DataFrame, n_edges: int) -> DataFrame:
+def _cc_local(spark, src, dst) -> DataFrame:
     """Bounded-size component solve: numpy min-label relaxation with
-    pointer jumping over a collected edge array (O(E log n) vectorized
+    pointer jumping over the collected edge arrays (O(E log n) vectorized
     work, ~ms at the 10^5-10^6-edge scale this path admits).  Returns the
     same (node, component=min id) frame as the distributed contraction."""
     import numpy as np
 
-    if n_edges == 0:
-        return spark.createDataFrame([], "node long, component long")
-    try:
-        tbl = edges.toArrow()
-        src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-        dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-    except Exception:
-        rows = edges.collect()
-        src = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-        dst = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
     nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     si, di = inv[: len(src)], inv[len(src):]
     lab = np.arange(len(nodes), dtype=np.int64)
@@ -676,18 +663,7 @@ def _cc_local(spark, edges: DataFrame, n_edges: int) -> DataFrame:
     else:  # pragma: no cover - 200 rounds covers graphs far past the cap
         raise RuntimeError("connected_components: local solve did not converge")
     comp = nodes[lab]  # nodes is ascending, so min index == min node id
-    import pandas as pd
-
-    out = pd.DataFrame({"node": nodes, "component": comp})
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        return spark.createDataFrame(out, "node long, component long")
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset("spark.sql.execution.arrow.pyspark.enabled")
-        else:
-            spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", prev_arrow)
+    return local_frame(spark, "node long, component long", nodes, comp)
 
 
 def dedup_clusters(

@@ -38,6 +38,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from tilekiln_spark.operators.local_solve import MAX_LOCAL_ROWS, collect_local, local_frame
+
 
 def pagerank(
     nodes: DataFrame,
@@ -66,9 +68,7 @@ def pagerank(
     # r6: rank frames are checkpointed (no stats), so hint the planner
     # into broadcast joins when the per-node frames are provably small —
     # n_nodes is already counted; big graphs keep shuffle joins (§3.1)
-    bcast = n_nodes <= int(
-        nodes.sparkSession.conf.get("spark.tilekiln.graph.broadcastNodes", "4000000")
-    )
+    bcast = n_nodes <= MAX_LOCAL_ROWS
 
     def _h(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast else df
@@ -142,9 +142,7 @@ def hits(
     # broadcast budget the hint picks the strategy the stats would have
     # (guide §3.1: pick the join strategy deliberately); big graphs keep
     # the shuffle joins.
-    bcast_scores = n_nodes <= int(
-        nodes.sparkSession.conf.get("spark.tilekiln.graph.broadcastNodes", "4000000")
-    )
+    bcast_scores = n_nodes <= MAX_LOCAL_ROWS
 
     def _h(df: DataFrame) -> DataFrame:
         return F.broadcast(df) if bcast_scores else df
@@ -754,14 +752,15 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
 
     Size-adaptive execution (round 6, the connected_components pattern):
     when the canonical undirected edge list is small (<=
-    ``spark.tilekiln.lpa.localEdges`` rows, default 4M — the
-    cc.localEdges bounded-collect budget class), the ``rounds``
-    synchronous updates run as vectorized numpy group-by passes on the
-    driver and the labels re-enter the plan as a local relation.  The
+    ``local_solve.MAX_LOCAL_ROWS`` rows, 4M) and its ids are null-free
+    integers, the ``rounds`` synchronous updates run as vectorized numpy
+    group-by passes on the driver and the labels re-enter the plan as a
+    local relation.  The
     update (mode of neighbor labels, smallest-label tie-break over
     integer ids) is fully deterministic, so the local sequence is
-    BIT-IDENTICAL to the distributed one round by round.  Above the cap
-    the per-round join/groupBy loop runs unchanged — the 100 TB path.
+    BIT-IDENTICAL to the distributed one round by round, in the ids' own
+    type.  Above the cap, and for non-integral ids, the per-round
+    join/groupBy loop runs unchanged — the 100 TB path.
 
     Returns [node, label] after ``rounds`` rounds."""
     if rounds < 1:
@@ -775,10 +774,10 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
         .distinct()
         .localCheckpoint(eager=False)
     )
-    n_edges = und.count()
-    local_cap = int(spark.conf.get("spark.tilekiln.lpa.localEdges", "4000000"))
-    if n_edges <= local_cap:
-        return _lpa_local(spark, und, rounds)
+    arrays = collect_local("label_propagation", und, ["u", "v"])
+    if arrays is not None:
+        t = und.schema["u"].dataType.simpleString()
+        return _lpa_local(spark, *arrays, rounds, f"node {t}, label {t}")
     nb = und.select(F.col("u").alias("node"), F.col("v").alias("nb")).union(
         und.select(F.col("v").alias("node"), F.col("u").alias("nb"))
     ).localCheckpoint(eager=False)
@@ -800,24 +799,16 @@ def label_propagation(edges: DataFrame, rounds: int = 4) -> DataFrame:
     return labels
 
 
-def _lpa_local(spark, und: DataFrame, rounds: int) -> DataFrame:
+def _lpa_local(spark, u, v, rounds: int, ddl: str) -> DataFrame:
     """Bounded-size label-propagation solve: ``rounds`` vectorized
     mode-of-neighbor-labels updates (argmax by count, smallest-label
-    tie-break) over the collected canonical edge list.  Deterministic
+    tie-break) over the collected canonical edge arrays.  Deterministic
     integer semantics — round-by-round identical to the distributed
     join/groupBy loop."""
     import numpy as np
 
-    try:
-        tbl = und.toArrow()
-        u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
-        v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
-    except Exception:
-        rows = und.collect()
-        u = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-        v = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
     if len(u) == 0:
-        return spark.createDataFrame([], "node long, label long")
+        return local_frame(spark, ddl, u, v)
     nodes, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
     ui, vi = inv[: len(u)], inv[len(u):]
     node_idx = np.concatenate([ui, vi])
@@ -848,20 +839,7 @@ def _lpa_local(spark, und: DataFrame, rounds: int) -> DataFrame:
         first[1:] = wn[1:] != wn[:-1]
         lab = lab.copy()
         lab[wn[first]] = glab[w_order][first]
-    import pandas as pd
-
-    out = pd.DataFrame({"node": nodes, "label": lab})
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        return spark.createDataFrame(out, "node long, label long")
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset("spark.sql.execution.arrow.pyspark.enabled")
-        else:
-            spark.conf.set(
-                "spark.sql.execution.arrow.pyspark.enabled", prev_arrow
-            )
+    return local_frame(spark, ddl, nodes, lab)
 
 
 def community_modularity(edges: DataFrame, labels: DataFrame) -> DataFrame:

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from tilekiln_spark.operators.local_solve import collect_local, integral, local_frame
+
 
 def pack_sequences(
     df: DataFrame,
@@ -42,30 +44,28 @@ def pack_sequences(
 
     Size-adaptive execution (r6, the connected_components pattern): the
     narrow (key, len) frame is sized by its lazy checkpoint's
-    materializing count; at or below ``spark.tilekiln.pack.localDocs``
-    (default 4M rows ~ 64 MB — the bounded-collect budget class) the
-    prefix sum runs as one numpy pass on the driver and the assignment
-    re-enters as a local relation.  The arithmetic replicates the
-    distributed path EXACTLY — int64 cumsum with the window's
-    RANGE-frame tie semantics (equal keys share the cumulative value)
-    and the same float64 floor-divisions — so the output is
-    bit-identical; integer keys only (string key ordering is
-    engine-collation territory — those keep the two-pass path).  Above
-    the cap the proven range-partition two-pass runs unchanged from the
-    same checkpoint (its lineage cut rides the sizing count)."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
+    materializing aggregate; at or below ``local_solve.MAX_LOCAL_ROWS``
+    (4M rows ~ 64 MB — the bounded-collect budget class) the prefix sum
+    runs as one numpy pass on the driver and the assignment re-enters as
+    a local relation.  The arithmetic replicates the distributed path
+    EXACTLY — int64 cumsum with the window's RANGE-frame tie semantics
+    (equal keys share the cumulative value) and the same float64
+    floor-divisions — so the output is bit-identical; null-free integer
+    keys and lengths only (string key ordering is engine-collation
+    territory, and a null length reads as a null assignment — those keep
+    the two-pass path).  Above the cap the proven range-partition
+    two-pass runs unchanged from the same checkpoint (its lineage cut
+    rides the sizing aggregate)."""
     spark = df.sparkSession
     n_parts = num_partitions or spark.sparkContext.defaultParallelism
     d0 = df.select(key_col, F.col(len_col).cast("long").alias("__len"))
-    key_is_int = isinstance(
-        df.schema[key_col].dataType, (ByteType, ShortType, IntegerType, LongType)
-    )
-    local_cap = int(spark.conf.get("spark.tilekiln.pack.localDocs", "4000000"))
-    if key_is_int and local_cap > 0:
+    if integral(d0, [key_col]):
         d0 = d0.localCheckpoint(eager=False)
-        if d0.count() <= local_cap:
-            return _pack_local(spark, d0, seq_len, len_col, key_col)
+    arrays = collect_local("pack_sequences", d0, [key_col, "__len"])
+    if arrays is not None:
+        kt = d0.schema[key_col].dataType.simpleString()
+        ddl = f"{key_col} {kt}, {len_col} long, first_seq int, last_seq int, seq_offset int"
+        return _pack_local(spark, *arrays, seq_len, ddl)
     d = (
         d0.repartitionByRange(n_parts, F.col(key_col).asc())
         .withColumn("__pid", F.spark_partition_id())
@@ -102,28 +102,12 @@ def pack_sequences(
     )
 
 
-def _pack_local(spark, nar: DataFrame, seq_len: int, len_col: str, key_col: str):
+def _pack_local(spark, keys, lens, seq_len: int, ddl: str):
     """Bounded-size packing assignment: numpy prefix sum over the collected
-    (key, len) rows, bit-identical to the two-pass distributed form
+    (key, len) arrays, bit-identical to the two-pass distributed form
     (int64 sums; RANGE-frame ties; float64 floor divisions)."""
     import numpy as np
-    import pandas as pd
 
-    try:
-        tbl = nar.toArrow()
-        keys = tbl.column(key_col).to_numpy(zero_copy_only=False).astype(np.int64)
-        lens = tbl.column("__len").to_numpy(zero_copy_only=False).astype(np.int64)
-    except Exception:
-        rows = nar.collect()
-        keys = np.fromiter((r[0] for r in rows), dtype=np.int64, count=len(rows))
-        lens = np.fromiter((r[1] for r in rows), dtype=np.int64, count=len(rows))
-    kt = nar.schema[key_col].dataType.simpleString()
-    schema = (
-        f"{key_col} {kt}, {len_col} long, first_seq int, last_seq int, "
-        "seq_offset int"
-    )
-    if len(keys) == 0:
-        return spark.createDataFrame([], schema)
     order = np.argsort(keys, kind="stable")
     sk, sl = keys[order], lens[order]
     cum = np.cumsum(sl)
@@ -138,23 +122,7 @@ def _pack_local(spark, nar: DataFrame, seq_len: int, len_col: str, key_col: str)
     first_seq = np.floor(start.astype(np.float64) / seq_len).astype(np.int32)
     last_seq = np.floor(end.astype(np.float64) / seq_len).astype(np.int32)
     seq_offset = (start % seq_len).astype(np.int32)
-    out = pd.DataFrame(
-        {
-            key_col: sk, len_col: sl, "first_seq": first_seq,
-            "last_seq": last_seq, "seq_offset": seq_offset,
-        }
-    )
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        return spark.createDataFrame(out, schema)
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset("spark.sql.execution.arrow.pyspark.enabled")
-        else:
-            spark.conf.set(
-                "spark.sql.execution.arrow.pyspark.enabled", prev_arrow
-            )
+    return local_frame(spark, ddl, sk, sl, first_seq, last_seq, seq_offset)
 
 
 def pack_token_sequences(

@@ -30,6 +30,7 @@ from tilekiln_spark.functions.tileids import (
     tile_x,
     tile_y,
 )
+from tilekiln_spark.operators.local_solve import MAX_LOCAL_ROWS, collect_local, local_frame
 
 
 def rasterize(
@@ -1483,11 +1484,10 @@ def flow_accumulation(
 
     Size-adaptive execution (round 6, the connected_components pattern):
     the grid size res² is known by construction, so at or below
-    ``spark.tilekiln.flow.localCells`` (default 4M — the bounded-collect
-    budget class of cc.localEdges) the accumulation solves as ONE
+    ``local_solve.MAX_LOCAL_ROWS`` (4M) the accumulation solves as ONE
     vectorized Kahn topological pass on the driver over the collected
-    flow edges and re-enters the plan as a local relation joined back to
-    the d8 frame.  The counts are EXACT integers (Σ upstream cells), a
+    d8 frame and re-enters the plan as a local relation joined back to
+    it.  The counts are EXACT integers (Σ upstream cells), a
     property of the flow forest, not the algorithm — bit-identical to the
     fixpoint — and the ``max_iter`` contract is preserved exactly: the
     local pass measures the longest flow path L and raises the same
@@ -1495,6 +1495,24 @@ def flow_accumulation(
     fixpoint at round max(L,1)+1).  Above the cap the proven per-round
     fixpoint runs unchanged — the 100 TB path."""
     d8 = d8_flow(cells, res).localCheckpoint(eager=True)
+    spark = cells.sparkSession
+    # a sink has no target: coalescing it to the cell itself keeps the
+    # solve columns null-free (the kernel follows only d8 > 0 cells)
+    arrays = collect_local(
+        "flow_accumulation",
+        d8.select(
+            "gx", "gy", "d8",
+            F.coalesce("tgt_gx", "gx").alias("tgt_gx"),
+            F.coalesce("tgt_gy", "gy").alias("tgt_gy"),
+        ),
+        ["gx", "gy", "d8", "tgt_gx", "tgt_gy"],
+        n_rows=res * res,
+    )
+    if arrays is not None:
+        accdf = _flow_acc_local(spark, *arrays, max_iter, d8.schema)
+        return d8.join(F.broadcast(accdf), ["gx", "gy"]).select(
+            "gx", "gy", "z", "d8", "acc"
+        )
     nodes = d8.select("gx", "gy")
     edges = (
         d8.where(F.col("d8") > 0)
@@ -1507,10 +1525,6 @@ def flow_accumulation(
         .join(nodes, ["gx", "gy"], "semi")
         .localCheckpoint(eager=True)
     )
-    spark = cells.sparkSession
-    local_cap = int(spark.conf.get("spark.tilekiln.flow.localCells", "4000000"))
-    if res * res <= local_cap:
-        return _flow_acc_local(spark, d8, nodes, edges, max_iter)
     # r6: per-round checkpoints are lazy and the convergence aggregate is
     # the materializing job — one job per round instead of an eager
     # checkpoint job plus a separate total-sum job (same fixpoint, same
@@ -1519,9 +1533,7 @@ def flow_accumulation(
     # (res^2 cells counted by construction) the per-cell frames get
     # explicit broadcast hints — the strategy the stats would have picked
     # (guide §3.1); big DEMs keep the shuffle joins.
-    bcast = (res * res) <= int(
-        spark.conf.get("spark.tilekiln.graph.broadcastNodes", "4000000")
-    )
+    bcast = (res * res) <= MAX_LOCAL_ROWS
 
     def _h(df):
         return F.broadcast(df) if bcast else df
@@ -1555,54 +1567,29 @@ def flow_accumulation(
     )
 
 
-def _collect_long_cols(df: DataFrame, cols: list):
-    """Collect named columns of a bounded frame as int64 numpy arrays
-    (Arrow fast path, row-collect fallback — the _cc_local contract)."""
-    import numpy as np
-
-    try:
-        tbl = df.toArrow()
-        return [
-            tbl.column(c).to_numpy(zero_copy_only=False).astype(np.int64)
-            for c in cols
-        ]
-    except Exception:
-        rows = df.select(*cols).collect()
-        n = len(rows)
-        return [
-            np.fromiter((r[i] for r in rows), dtype=np.int64, count=n)
-            for i in range(len(cols))
-        ]
-
-
-def _flow_acc_local(spark, d8, nodes, edges, max_iter: int):
+def _flow_acc_local(spark, ngx, ngy, d8, tgx, tgy, max_iter: int, schema):
     """Bounded-grid accumulation solve: one vectorized Kahn topological
-    pass over the collected flow edges (O(V+E) work, rounds = longest
+    pass over the collected d8 arrays (O(V+E) work, rounds = longest
     path, all numpy).  Exact integer upstream counts — identical to the
     distributed fixpoint — with the same max_iter named error: the
     distributed loop detects the fixpoint at round max(L,1)+1 for longest
-    flow path L, so the local pass raises iff max(L,1)+1 > max_iter."""
+    flow path L, so the local pass raises iff max(L,1)+1 > max_iter.
+    Returns (gx, gy, acc) typed like ``schema``'s gx/gy."""
     import numpy as np
 
-    (ngx, ngy) = _collect_long_cols(nodes, ["gx", "gy"])
-    (ux, uy, egx, egy) = _collect_long_cols(edges, ["ux", "uy", "gx", "gy"])
     # injective (gx, gy) -> int64 key; grid coords are << 2^31 under the
     # local-cells cap
     nkey = ngx * np.int64(2**32) + ngy
     order = np.argsort(nkey, kind="stable")
     skey = nkey[order]
-
-    def _idx(kx, ky):
-        k = kx * np.int64(2**32) + ky
-        pos = np.searchsorted(skey, k)
-        pos = np.minimum(pos, len(skey) - 1)
-        if not np.array_equal(skey[pos], k):  # edges reference only present cells
-            raise AssertionError("flow_accumulation: edge endpoint not in node set")
-        return order[pos]
-
     n = len(nkey)
-    ui = _idx(ux, uy)
-    ci = _idx(egx, egy)
+    # flow edges: non-sinks whose target is a present cell (the semi join
+    # of the distributed path; off-grid targets drain away)
+    tkey = tgx * np.int64(2**32) + tgy
+    pos = np.minimum(np.searchsorted(skey, tkey), max(n - 1, 0))
+    keep = (d8 > 0) & (skey[pos] == tkey)
+    ui = np.nonzero(keep)[0]
+    ci = order[pos[keep]]
     ptr = np.full(n, -1, dtype=np.int64)
     ptr[ui] = ci  # D8: at most one downstream target per cell
     indeg = np.bincount(ci, minlength=n)
@@ -1627,23 +1614,9 @@ def _flow_acc_local(spark, d8, nodes, edges, max_iter: int):
         raise ValueError(
             f"flow_accumulation: no fixpoint within max_iter={max_iter} rounds"
         )
-    import pandas as pd
-
-    out = pd.DataFrame({"gx": ngx, "gy": ngy, "acc": acc})
-    prev_arrow = spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", None)
-    try:
-        spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
-        accdf = spark.createDataFrame(out, "gx long, gy long, acc long")
-    finally:
-        if prev_arrow is None:
-            spark.conf.unset("spark.sql.execution.arrow.pyspark.enabled")
-        else:
-            spark.conf.set(
-                "spark.sql.execution.arrow.pyspark.enabled", prev_arrow
-            )
-    return d8.join(F.broadcast(accdf), ["gx", "gy"]).select(
-        "gx", "gy", "z", "d8", "acc"
-    )
+    gx_t = schema["gx"].dataType.simpleString()
+    gy_t = schema["gy"].dataType.simpleString()
+    return local_frame(spark, f"gx {gx_t}, gy {gy_t}, acc long", ngx, ngy, acc)
 
 
 def watershed_basins(
